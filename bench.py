@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from catme_etl_j_spark.session import get_spark  # noqa: E402
+from catme_etl_j_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 # Headline set: covers joins+aggs (q01..q10), windows, sessionization,
 # shingle/LSH dedup, blocked ANN, and text scoring — the engine's
@@ -630,7 +630,7 @@ def write_bench_log(
             for name in sorted(timings)
         },
         "env": {
-            "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+            "cpus": DEFAULT_CPUS,
             "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             "load_avg_1m": load1,
             "load_avg_5m": load5,

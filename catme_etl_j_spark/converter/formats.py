@@ -514,7 +514,13 @@ def _render_number(value: float, sec: _NumberSection, *, force_sign: bool) -> st
             exp_val = math.floor(math.log10(x))
             step = max(sec.n_int_placeholders, 1)
             exp_val = (exp_val // step) * step
-            x = x / (10.0**exp_val)
+            if exp_val < -300:
+                # 10.0**exp_val would be subnormal (10.02E-321 for
+                # 1e-320) or underflow to 0.0 (subnormal cells):
+                # scale in two normal-range steps
+                x = x * 1e300 / 10.0 ** (exp_val + 300)
+            else:
+                x = x / (10.0**exp_val)
 
     whole_str = frac_str = ""
     if has_frac:

@@ -285,59 +285,62 @@ def read_xlsx(
     spool: str | None = None
     n_par = int(spark.sparkContext.defaultParallelism)
     if local is not None and not multi and single_file and n_par > 1:
-        with XlsxWorkbook(
-            local,
-            min_inflate_ratio=min_inflate_ratio,
-            max_entry_size=max_entry_size,
-        ) as _wb:
-            entry_size = _wb.sheet_entry_size(sheet_name, sheet_index)
-            meta = None
-            if entry_size is not None and entry_size >= _SLICE_MIN_BYTES:
-                fd, spool = tempfile.mkstemp(
-                    prefix="catme_sheet_spool_", suffix=".xml"
-                )
-                os.close(fd)
-                meta = _wb.spool_sheet(sheet_name, sheet_index, spool_path=spool)
-            no_dim = (
-                _wb.sheet_dimension(sheet_name, sheet_index) is None
-                if meta is not None
-                else False
-            )
-        slice_width: int | None = None
-        if meta is not None:
-            ok, decl_q = parse_decl_head(meta["head"])
-            if ok:
-                fsize, frf = meta["file_size"], meta["first_row_off"]
-                want_width = no_dim and header_row == 0
-                n_sl = min(n_par, max(2, fsize // SLICE_TARGET_BYTES))
-                span = fsize - frf
-                targets = [frf + (k * span) // n_sl for k in range(1, n_sl)]
-                ranges = [
-                    ((j * fsize) // n_sl, ((j + 1) * fsize) // n_sl)
-                    for j in range(n_sl)
-                ]
-                sp_path = spool
-                res = (
-                    spark.sparkContext.parallelize(ranges, len(ranges))
-                    .map(
-                        lambda r: scan_slice_range(
-                            sp_path, r[0], r[1], targets, decl_q, want_width
-                        )
+        # the spool is removed on every path that does not register it:
+        # slice refusal and any exception from spooling or the scan
+        try:
+            with XlsxWorkbook(
+                local,
+                min_inflate_ratio=min_inflate_ratio,
+                max_entry_size=max_entry_size,
+            ) as _wb:
+                entry_size = _wb.sheet_entry_size(sheet_name, sheet_index)
+                meta = None
+                if entry_size is not None and entry_size >= _SLICE_MIN_BYTES:
+                    fd, spool = tempfile.mkstemp(
+                        prefix="catme_sheet_spool_", suffix=".xml"
                     )
-                    .collect()
+                    os.close(fd)
+                    meta = _wb.spool_sheet(sheet_name, sheet_index, spool_path=spool)
+                no_dim = (
+                    _wb.sheet_dimension(sheet_name, sheet_index) is None
+                    if meta is not None
+                    else False
                 )
-                slice_plan, slice_width = combine_slice_scans(
-                    res,
-                    first_row_off=frf,
-                    targets=targets,
-                    want_width=want_width,
-                )
-        if slice_plan is None:
-            if spool is not None:
+            slice_width: int | None = None
+            if meta is not None:
+                ok, decl_q = parse_decl_head(meta["head"])
+                if ok:
+                    fsize, frf = meta["file_size"], meta["first_row_off"]
+                    want_width = no_dim and header_row == 0
+                    n_sl = min(n_par, max(2, fsize // SLICE_TARGET_BYTES))
+                    span = fsize - frf
+                    targets = [frf + (k * span) // n_sl for k in range(1, n_sl)]
+                    ranges = [
+                        ((j * fsize) // n_sl, ((j + 1) * fsize) // n_sl)
+                        for j in range(n_sl)
+                    ]
+                    sp_path = spool
+                    res = (
+                        spark.sparkContext.parallelize(ranges, len(ranges))
+                        .map(
+                            lambda r: scan_slice_range(
+                                sp_path, r[0], r[1], targets, decl_q, want_width
+                            )
+                        )
+                        .collect()
+                    )
+                    slice_plan, slice_width = combine_slice_scans(
+                        res,
+                        first_row_off=frf,
+                        targets=targets,
+                        want_width=want_width,
+                    )
+        finally:
+            if slice_plan is None and spool is not None:
                 with contextlib.suppress(OSError):
                     os.remove(spool)
-            spool = None
-        else:
+                spool = None
+        if slice_plan is not None:
             _register_spool(spool)
             if no_dim and header_row == 0:
                 # strict width from the parallel scan; if it refused

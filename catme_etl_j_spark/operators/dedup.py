@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from catme_etl_j_spark.operators.iterate import until_fixpoint
 from catme_etl_j_spark.operators.text import NORM_DUCK, NORM_SPARK
 from catme_etl_j_spark.sources.tables import load_table, spread_small_scan
 
@@ -773,10 +774,9 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     components took 9 plain-propagation steps vs 6 with halving
     (shallow 2-step MinHash components are unaffected). Each
     MATERIALIZATION round runs TWO steps (the per-round fixed costs —
-    eager localCheckpoint AQE replan + convergence-probe job,
-    convention #15 — dominate at small frames and are paid half as
-    often; every intermediate has exactly one consumer so the fused
-    lineage never re-expands). Every rep value is itself a node id,
+    eager localCheckpoint AQE replan, see operators.iterate — dominate
+    at small frames and are paid half as often; every intermediate has
+    exactly one consumer so the fused lineage never re-expands). Every rep value is itself a node id,
     so the halving shortcut is an equi-join against the round base's
     checkpointed materialization — a scan, not a recompute. The
     fixpoint (min label per component) is unchanged: halving only
@@ -786,24 +786,12 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
     ``localCheckpoint`` truncates the growing lineage; on a cluster
     use a checkpoint dir for fault tolerance instead. Convergence test
-    is the sum of labels: propagation only ever lowers a label, so an
-    unchanged sum means a fixpoint.
-
-    r12 (VERDICT r11 #1b/#4 — cut the per-round serial floor): the
-    convergence probe no longer schedules its own job. Both steps'
-    label sums ride the checkpoint materialization as observed metrics
-    (``Dataset.observe``; the eager localCheckpoint IS a SQL execution,
-    so the metrics resolve from that job — probed empirically, and
-    eager=False does NOT run the final stage, so the fold requires the
-    eager default). Comparing the two WITHIN-round sums also detects a
-    fixpoint reached on the round's first step: step 2 changing nothing
-    (sum(m1) == sum(m2), exact integers, per-node monotone non-
-    increasing, so equal sums == equal labels) proves m1 was already a
-    fixpoint — shallow closures (MinHash components converge in 1-2
-    steps) now finish in ONE materialization round instead of two, and
-    the old separate initial-sum job is gone entirely.
+    (``until_fixpoint``): both steps' label sums ride the round's
+    checkpoint as observed metrics, and propagation only ever lowers a
+    label, so step 2 leaving the sum unchanged proves step 1 already
+    reached the fixpoint — shallow closures (MinHash components
+    converge in 1-2 steps) finish in ONE materialization round.
     """
-    from pyspark.sql import Observation
     # Materialize the edge set ONCE before iterating: without this,
     # every round's join re-executes the edges' full upstream pipeline
     # (for LSH edges: shingle -> minhash -> band self-join), multiplying
@@ -817,7 +805,6 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         nodes.select(F.col("nid").alias("src"), F.col("nid").alias("dst"))
     ).localCheckpoint()
     labels = nodes.select(F.col("nid"), F.col("nid").alias("rep")).localCheckpoint()
-    rounds = 0
 
     def _step(cur: DataFrame, halve_vs: DataFrame | None) -> DataFrame:
         nxt = (
@@ -842,34 +829,15 @@ def _connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             )
         return nxt
 
-    while True:
-        # TWO propagation steps per materialization: each intermediate
-        # below has exactly one consumer, so the lineage stays linear
-        # and un-re-expanded, while the per-round fixed costs (eager
-        # localCheckpoint AQE replan — convention #15) are paid half as
-        # often. Halving is skipped in the first round's first step,
-        # where labels is the identity map and the shortcut is provably
-        # a no-op join. Both steps' sums ride the checkpoint job as
-        # observed metrics (zero probe jobs — see the docstring); equal
-        # sums within the round mean step 2 changed nothing, i.e. the
-        # fixpoint is reached (possibly on the round's FIRST step).
-        obs1, obs2 = Observation(), Observation()
-        m1 = _step(labels, labels if rounds > 0 else None).observe(
-            obs1, F.sum("rep").alias("s")
-        )
-        m2 = _step(m1, labels if rounds > 0 else None).observe(
-            obs2, F.sum("rep").alias("s")
-        )
-        labels = m2.localCheckpoint()
-        rounds += 1
-        if obs2.get["s"] == obs1.get["s"]:
-            _CC_LAST_ROUNDS[0] = rounds
-            return labels
+    def _round(cur: DataFrame, k: int, watch) -> DataFrame:
+        # halving is skipped in the first round, where the round base
+        # is the identity map and the shortcut is a provable no-op
+        base = cur if k > 1 else None
+        m1 = watch(_step(cur, base), F.sum("rep"))
+        return watch(_step(m1, base), F.sum("rep"))
 
+    return until_fixpoint(labels, _round, lambda s1, s2: s1 == s2)[-1][1]
 
-# rounds-to-fixpoint of the most recent _connected_components call
-# (instrumentation for bench/regression triage; not part of any result)
-_CC_LAST_ROUNDS = [0]
 
 def dedup_minhash_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated corpus membership: every document with its near-dup

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from catme_etl_j_spark.operators.iterate import fixed_rounds, until_fixpoint
 from catme_etl_j_spark.sources.tables import load_table
 
 PR_SCALE = 1_000_000_000  # int64 fixed-point
@@ -431,7 +432,9 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest key on ties — data-dependent but deterministic). Each round: frontier ⋈ edges -> dedup -> anti-
     join against visited; the edge set is localCheckpoint'd once
     before the loop and each round's visited set re-checkpoints so
-    lineage stays flat (the dedup._connected_components lesson).
+    lineage stays flat (the dedup._connected_components lesson). The
+    new level's size rides that checkpoint as an observed probe, and
+    the next frontier is read back from it.
 
     Oracle: DuckDB recursive CTE with a depth cap; MIN(dist) per node
     is exactly the BFS level. All arithmetic is integer.
@@ -460,11 +463,10 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .first()
     )
     source = int(src_row["src"])
-    dist = spark.createDataFrame(
-        [(source, 0)], "node long, dist long"
-    ).localCheckpoint()
-    frontier = dist
-    for level in range(1, BFS_MAX_DEPTH + 1):
+
+    def _level(dist: DataFrame, level: int, watch) -> DataFrame:
+        # the frontier is read back from the checkpointed visited set
+        frontier = dist.filter(F.col("dist") == level - 1)
         nxt = (
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
@@ -472,10 +474,13 @@ def graph_bfs_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(dist, "node", "left_anti")
             .withColumn("dist", F.lit(level).cast("long"))
         )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        return dist.unionByName(watch(nxt, F.count(F.lit(1))))
+
+    dist = spark.createDataFrame(
+        [(source, 0)], "node long, dist long"
+    ).localCheckpoint()
+    # an empty new level is the fixpoint
+    dist = until_fixpoint(dist, _level, lambda n_new: n_new == 0, BFS_MAX_DEPTH)[-1][1]
     nations = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("long").alias("node"), "n_name"
     )
@@ -533,7 +538,7 @@ ORDER BY node
 
 PRU_ITERS = 5  # fixed unrolled rounds (oracle unrolls the same 5 CTEs)
 PRU_TOPK = 20
-PRU_CHECKPOINT_EVERY = 2
+PRU_CHECKPOINT_EVERY = PRU_ITERS  # no mid-loop eager checkpoint
 
 
 def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,9 +597,10 @@ def _pagerank_users_ranks(
     graph (conv. #9): an empty node spine empties every downstream
     frame, which is exactly the oracle's result.
 
-    ``checkpoint_every`` is exposed so tests can pin the UNtruncated
-    plan (proving the per-round joins); the shipped query truncates at
-    4 sites — adjacency, ew, round K-1 (the audit's `prev`), round K.
+    ``checkpoint_every=0`` exposes the UNtruncated plan so tests can
+    pin the per-round joins; the shipped query truncates lazily at 5
+    sites — adjacency, node spine, ew, round K-1 (the audit's `prev`),
+    round K.
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "user_id"
@@ -639,9 +645,8 @@ def _pagerank_users_ranks(
     ew = edges.join(outw, "src").select("src", "dst", "w", "outw")
     if checkpoint_every:
         ew = ew.localCheckpoint(eager=False)
-    ranks = nwb.select("node", F.col("r0").cast("long").alias("r"))
-    prev = None
-    for k in range(1, PRU_ITERS + 1):
+
+    def _round(ranks: DataFrame, k: int) -> DataFrame:
         contrib = (
             ew.join(ranks, ew.src == ranks.node)
             .select(
@@ -650,13 +655,11 @@ def _pagerank_users_ranks(
                 F.lit(None).cast("long").alias("base"),
             )
         )
-        if k == PRU_ITERS:
-            prev = ranks
         # union-rebase: every node contributes one zero row carrying
         # its base scalar, so ONE aggregate yields sum(c) (0 for
         # isolated nodes) AND the base (max ignores the NULLs on the
         # contribution rows; each node has exactly one spine row)
-        ranks = (
+        return (
             contrib.unionByName(
                 nwb.select(
                     F.col("node").alias("dst"),
@@ -672,19 +675,17 @@ def _pagerank_users_ranks(
             )
             .select(F.col("dst").alias("node"), "r")
         )
-        if checkpoint_every and k == PRU_ITERS - 1:
-            # the audit's `prev` frame — truncate so the audit join
-            # reads a materialization, not rounds 1..K-1 again
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks, prev = fixed_rounds(
+        nwb.select("node", F.col("r0").cast("long").alias("r")),
+        _round,
+        PRU_ITERS,
+        checkpoint_every,
+    )
     # Convergence audit (VERDICT r8 #4): total absolute rank movement
     # in the final round, exact int64 — 0 means the power iteration
     # reached its integer fixpoint inside PRU_ITERS rounds; a nonzero
     # residual makes the fixed-round cut visible in the result.
-    # Convention #12 (VERDICT r9 #1): the final-round frame is
-    # referenced TWICE (audit join + output) — lazily checkpoint it so
-    # the last round computes once, not once per consumer.
-    if checkpoint_every:
-        ranks = ranks.localCheckpoint(eager=False)
     audit = (
         ranks.join(prev.select("node", F.col("r").alias("pr")), "node")
         .agg(
@@ -756,11 +757,8 @@ def graph_lpa_communities(
     Scale shape per round: labels-onto-edges equi-join + one (node,
     label) partial-aggregated sum + one per-node partial-aggregated
     max — all co-shuffled on the node key, no per-round sort; labels
-    localCheckpoint every 2 rounds, exactly the pagerank_users loop
-    discipline, plus lazy truncations of the round-(K-1) and round-K
-    frames (each has 2 consumers: the audit join and the next stage —
-    convention #12). ``checkpoint_every=0`` exposes the untruncated
-    plan for the test pins.
+    checkpoint every 2 rounds (``fixed_rounds``). ``checkpoint_every=0``
+    exposes the untruncated plan for the test pins.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ed = _user_edges(spark, sf_dir)
@@ -783,16 +781,8 @@ def graph_lpa_communities(
         .distinct()
         .withColumn("lbl", F.col("node"))
     )
-    prev = None
-    for k in range(1, LPA_ITERS + 1):
-        # Convention #12 (VERDICT r9 #1): the frame ENTERING the final
-        # round is referenced by round K's join AND kept as `prev` for
-        # the audit — truncate it here unless the cadence already did
-        # ((LPA_ITERS-1) % 2 != 0, so round K-1 is un-checkpointed).
-        if k == LPA_ITERS:
-            if checkpoint_every and (k - 1) % checkpoint_every != 0:
-                labels = labels.localCheckpoint(eager=False)
-            prev = labels
+
+    def _round(labels: DataFrame, k: int) -> DataFrame:
         nbr_lbl = both.join(
             labels.select(F.col("node").alias("nbr"), F.col("lbl").alias("nlbl")),
             "nbr",
@@ -809,7 +799,7 @@ def graph_lpa_communities(
             .select("node", (-F.col("m.nl")).alias("new_lbl"))
         )
         # double-mod parity: identical for negative ids on every engine
-        labels = labels.join(best, "node", "left").select(
+        return labels.join(best, "node", "left").select(
             "node",
             F.when(
                 F.expr("((node % 2) + 2) % 2") == k % 2,
@@ -818,12 +808,8 @@ def graph_lpa_communities(
             .otherwise(F.col("lbl"))
             .alias("lbl"),
         )
-        if checkpoint_every and k % checkpoint_every == 0 and k < LPA_ITERS:
-            labels = labels.localCheckpoint()
-    # final-round frame feeds the audit join AND the community count:
-    # lazy checkpoint = round K computes once (convention #12)
-    if checkpoint_every:
-        labels = labels.localCheckpoint(eager=False)
+
+    labels, prev = fixed_rounds(labels, _round, LPA_ITERS, checkpoint_every)
     audit = (
         labels.join(prev.select("node", F.col("lbl").alias("plbl")), "node")
         .agg(
@@ -985,53 +971,22 @@ def _sym_user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s_core_round(
-    ea: DataFrame, s_thr: int, checkpoint: bool = True, st: DataFrame = None
-):
-    """One peeling round: strength aggregate -> alive filter -> two
-    LEFT SEMI prunes of the surviving edge list.
+def _strength(ea: DataFrame) -> DataFrame:
+    """(node, s): each node's summed incident edge weight."""
+    return (
+        ea.select(F.col("e1").alias("node"), "w")
+        .unionByName(ea.select(F.col("e2").alias("node"), "w"))
+        .groupBy("node")
+        .agg(F.sum("w").alias("s"))
+    )
 
-    Convention #12 (VERDICT r9 #1): both frames have 2+ consumers —
-    ``alive`` feeds the two semi-joins and the trajectory's n_alive
-    count, ``ea`` feeds next round's strength aggregate and this
-    round's edge stats — so each checkpoints once per round (alive
-    BEFORE the prune, so the strength aggregate runs exactly once).
-    The old every-2-rounds cadence re-derived odd rounds ~3x (once per
-    trajectory-row consumer). Both frames shrink monotonically, so the
-    materializations get cheaper as peeling proceeds.
-    ``st`` lets the caller hand in an already-built strength frame
-    (round 1 reuses the checkpointed st0 that fed the median walk —
-    VERDICT r10 #2); by default the round aggregates it from ``ea``.
-    ``checkpoint=False`` exposes one round's untruncated plan for the
-    test pin.
-    """
-    if st is None:
-        st = (
-            ea.select(F.col("e1").alias("node"), "w")
-            .unionByName(ea.select(F.col("e2").alias("node"), "w"))
-            .groupBy("node")
-            .agg(F.sum("w").alias("s"))
-        )
-    alive = st.filter(F.col("s") >= s_thr).select("node")
-    obs = None
-    if checkpoint:
-        # r12 (VERDICT r11 #1b): the caller's per-round emptiness probe
-        # rides the checkpoint materialization as an observed metric
-        # instead of scheduling its own isEmpty() job. The checkpoint
-        # must be EAGER for the metric to resolve (a lazy checkpoint
-        # materializes upstream stages but not the final one); the
-        # frame was materialized either way — the probe job is the
-        # saving, one per round.
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        alive = alive.observe(obs, F.count(F.lit(1)).alias("c")).localCheckpoint()
-    nxt = ea.join(
+def _s_core_prune(ea: DataFrame, alive: DataFrame) -> DataFrame:
+    """The surviving edge list: two LEFT SEMI prunes of ``ea`` onto the
+    ``alive`` node set."""
+    return ea.join(
         alive.withColumnRenamed("node", "e1"), "e1", "left_semi"
     ).join(alive.withColumnRenamed("node", "e2"), "e2", "left_semi")
-    if checkpoint:
-        nxt = nxt.localCheckpoint(eager=False)
-    return alive, nxt, obs
 
 
 def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1056,24 +1011,13 @@ def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut visible in the result.
 
     Scale shape: the edge list localCheckpoints once; each round is
-    two LEFT SEMI hash equi-joins (alive onto the SURVIVING edges —
-    round r's survivors are round r+1's input, so the frames shrink)
-    + one map-side-combined strength aggregate — the Pregel
-    discipline of pagerank_users/LPA; alive set and survivor edges
-    checkpoint every round (both have 2+ consumers — convention #12 —
-    and both shrink monotonically, so the per-round materialization
-    cost falls as peeling proceeds). Two r11 reworks (VERDICT r10
-    #1/#2): (a) the initial strength frame st0 checkpoints once and
-    feeds BOTH the median walk and round 1's alive filter — r10
-    aggregated the strengths twice; (b) the avalanche's fixpoint
-    short-circuits: once `alive` is empty every later round is
+    two LEFT SEMI hash equi-joins (alive onto the SURVIVING edges, so
+    the frames shrink) + one map-side-combined strength aggregate. The
+    initial strengths st0 checkpoint once and feed both the median
+    walk and round 1. The avalanche's fixpoint short-circuits
+    (``until_fixpoint``): once `alive` is empty every later round is
     provably (0, 0, 0) (empty alive => empty survivor edges => empty
-    strengths => empty alive), so those rounds emit literal rows
-    instead of scheduling six empty-frame jobs each. The emptiness
-    probe is a bounded per-round driver boolean on a frame the
-    checkpoint materializes anyway, and it is exactly what makes the
-    fixed-SCORE_ITERS contract cheap when the core collapses early —
-    at any scale.
+    strengths => empty alive), so those rounds emit literal rows.
 
     The two driver-side scalars (node count, lower median via the
     value-walk over per-strength counts — no global row_number over
@@ -1085,13 +1029,8 @@ def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     edges = _sym_user_edges(spark, sf_dir).localCheckpoint(eager=False)
-    st0 = (
-        edges.select(F.col("e1").alias("node"), "w")
-        .unionByName(edges.select(F.col("e2").alias("node"), "w"))
-        .groupBy("node")
-        .agg(F.sum("w").alias("s"))
-        .localCheckpoint(eager=False)  # consumers: median walk, round 1
-    )
+    # consumers: median walk, round 1
+    st0 = _strength(edges).localCheckpoint(eager=False)
     # ONE driver action: the cum-walk carries the total alongside, so
     # the lower-median rank (n+1)//2 resolves in the same 1-row fetch.
     wcum = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
@@ -1114,49 +1053,42 @@ def graph_s_core_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         s_thr = int(med_row["med"]) * SCORE_PCT // 100 + 1
     n_nodes0 = int(med_row["n0"] or 0)
-    # Round r's surviving-edge set IS round r+1's input (alive sets
+    # Round r's surviving edges `ea` are round r+1's input (alive sets
     # shrink monotonically, so filtering the previous survivors equals
-    # re-filtering the full edge list — the oracle does the latter):
-    # carry `ea` forward for 2 semi-joins per round instead of 4, each
-    # round over a shrinking frame.
-    ea = edges
-    st = st0
-    rows = []
-    collapsed = False
-    for r in range(1, SCORE_ITERS + 1):
-        if collapsed:
-            # past the fixpoint: the round is identically empty
-            rows.append(
-                spark.range(1).select(
-                    F.lit(0).cast("long").alias("n_alive"),
-                    F.lit(0).cast("long").alias("n_edges"),
-                    F.lit(0).cast("long").alias("total_w"),
-                    F.lit(r).alias("round"),
-                )
+    # re-filtering the full edge list — the oracle does the latter).
+    # Both per-round frames have 2+ consumers (convention #12): `alive`
+    # checkpoints eagerly with the emptiness probe before the prune,
+    # the carried survivors lazily.
+
+    def _peel(ea: DataFrame, r: int, watch) -> DataFrame:
+        st = st0 if r == 1 else _strength(ea)
+        alive = st.filter(F.col("s") >= s_thr).select("node")
+        return watch(alive, F.count(F.lit(1)))
+
+    peeled = until_fixpoint(
+        edges, _peel, lambda n_alive: n_alive == 0, SCORE_ITERS, _s_core_prune
+    )
+    rows = [
+        alive.agg(F.count("*").cast("long").alias("n_alive"))
+        .crossJoin(
+            ea.agg(
+                F.count("*").cast("long").alias("n_edges"),
+                F.expr("CAST(coalesce(sum(w), 0) AS BIGINT)").alias("total_w"),
             )
-            continue
-        alive, ea, obs = _s_core_round(ea, s_thr, st=st)
-        rows.append(
-            alive.agg(F.count("*").cast("long").alias("n_alive"))
-            .crossJoin(
-                ea.agg(
-                    F.count("*").cast("long").alias("n_edges"),
-                    F.expr("CAST(coalesce(sum(w), 0) AS BIGINT)").alias("total_w"),
-                )
-            )
-            .withColumn("round", F.lit(r))
         )
-        # the observed row count resolved during alive's checkpoint
-        # materialization — no isEmpty() probe job (VERDICT r11 #1b)
-        if obs.get["c"] == 0:
-            collapsed = True
-        else:
-            st = (
-                ea.select(F.col("e1").alias("node"), "w")
-                .unionByName(ea.select(F.col("e2").alias("node"), "w"))
-                .groupBy("node")
-                .agg(F.sum("w").alias("s"))
-            )
+        .withColumn("round", F.lit(r))
+        for r, (alive, ea) in enumerate(peeled, 1)
+    ]
+    # past the fixpoint every round is identically empty (literal rows)
+    rows += [
+        spark.range(1).select(
+            F.lit(0).cast("long").alias("n_alive"),
+            F.lit(0).cast("long").alias("n_edges"),
+            F.lit(0).cast("long").alias("total_w"),
+            F.lit(r).alias("round"),
+        )
+        for r in range(len(peeled) + 1, SCORE_ITERS + 1)
+    ]
     from functools import reduce
 
     out = reduce(lambda a, b: a.unionByName(b), rows)
@@ -1282,8 +1214,8 @@ def graph_connected_components(
 
     Scale shape per round: labels-onto-edges equi-join + one per-node
     partial-aggregated MIN — co-shuffled on the node key, no sort, no
-    windows; labels localCheckpoint every 2 rounds (the
-    pagerank_users/LPA loop discipline). At 100 TB the production form
+    windows; labels checkpoint every 2 rounds (``fixed_rounds``).
+    At 100 TB the production form
     is large-star/small-star (Kiveris et al. 2014) for O(log n)
     convergence; plain propagation keeps the oracle exactly unrollable.
 
@@ -1309,12 +1241,8 @@ def graph_connected_components(
         .distinct()
         .withColumn("lbl", F.col("node"))
     )
-    prev = None
-    for k in range(1, CC_ITERS + 1):
-        # convention #12: `prev` (round K-1) is already cadence-
-        # checkpointed ((CC_ITERS-1) % 2 == 0); capture before round K
-        if k == CC_ITERS:
-            prev = labels
+
+    def _round(labels: DataFrame, k: int) -> DataFrame:
         nbr_min = (
             both.join(
                 labels.select(F.col("node").alias("nbr"), F.col("lbl").alias("nlbl")),
@@ -1323,16 +1251,11 @@ def graph_connected_components(
             .groupBy("node")
             .agg(F.min("nlbl").alias("nmin"))
         )
-        labels = labels.join(nbr_min, "node", "left").select(
+        return labels.join(nbr_min, "node", "left").select(
             "node", F.least(F.col("lbl"), F.col("nmin")).alias("lbl")
         )
-        if checkpoint_every and k % checkpoint_every == 0 and k < CC_ITERS:
-            labels = labels.localCheckpoint()
-    # final-round frame feeds the audit join AND the component count:
-    # lazy checkpoint = round K computes once (convention #12,
-    # VERDICT r9 #1 — this double reference was the r9 +51 %)
-    if checkpoint_every:
-        labels = labels.localCheckpoint(eager=False)
+
+    labels, prev = fixed_rounds(labels, _round, CC_ITERS, checkpoint_every)
     audit = (
         labels.join(
             prev.select("node", F.col("lbl").alias("plbl")), "node"
@@ -1445,9 +1368,8 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank frame on src (both shuffled on the same key — at cluster
     scale the edge list is bucketed once and every round reuses the
     layout) and one map-side-combined per-dst sum; the node rebase is
-    a LEFT join on the node set. localCheckpoint every 2 rounds bounds
-    lineage (pagerank precedent). alpha_den is a 1-row aggregate
-    scalar, not data-sized driver state.
+    a LEFT join on the node set; checkpoints every 2 rounds
+    (``fixed_rounds``). alpha_den is a 1-row aggregate scalar.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # both loop-invariant frames materialize ONCE: every round (and the
@@ -1466,34 +1388,28 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("instr").alias("m")
     ).first()
     alpha_den = int(row["m"] or 0) + 1
-    xs = nodes.select("node", F.lit(KZ_SCALE).cast("long").alias("x"))
-    prev = None
-    for k in range(1, KZ_ITERS + 1):
-        if k == KZ_ITERS:
-            # convention #12 (VERDICT r9 #1): round K-1 is
-            # un-checkpointed at this cadence ((KZ_ITERS-1) % 2 != 0)
-            # and both round K's contribution join and the audit's
-            # `prev` side read it. One lazy truncation covers both.
-            xs = xs.localCheckpoint(eager=False)
-            prev = xs
+
+    def _round(xs: DataFrame, k: int) -> DataFrame:
         s = (
             edges.join(xs, edges.src == xs.node)
             .select("dst", F.expr(f"(x * w) DIV {alpha_den}").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        xs = nodes.join(s, nodes.node == s.dst, "left").select(
+        return nodes.join(s, nodes.node == s.dst, "left").select(
             nodes.node,
             (
                 F.lit(KZ_SCALE).cast("long")
                 + F.coalesce(F.col("s"), F.lit(0).cast("long"))
             ).cast("long").alias("x"),
         )
-        if k % KZ_CHECKPOINT_EVERY == 0 and k < KZ_ITERS:
-            xs = xs.localCheckpoint()
-    # final-round frame feeds the audit join AND the top-k output:
-    # lazy checkpoint = round K computes once (convention #12)
-    xs = xs.localCheckpoint(eager=False)
+
+    xs, prev = fixed_rounds(
+        nodes.select("node", F.lit(KZ_SCALE).cast("long").alias("x")),
+        _round,
+        KZ_ITERS,
+        KZ_CHECKPOINT_EVERY,
+    )
     audit = xs.join(prev.select("node", F.col("x").alias("px")), "node").agg(
         F.coalesce(F.sum(F.abs(F.col("x") - F.col("px"))), F.lit(0))
         .cast("long")

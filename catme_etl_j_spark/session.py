@@ -19,7 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the cores this process may run on; SPARK_GRAFT_CPUS overrides
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "catme_etl_j_spark", cpus: str | None = None) -> SparkSession:

@@ -248,6 +248,35 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
     assert parallel_plan(nor, 4) == (None, None)
 
 
+def test_failed_slice_scan_leaves_no_spool(spark, tmp_path, monkeypatch):
+    """An exception between spooling the sheet and registering the spool
+    (here: the slice scan) removes the sheet-sized spool file instead of
+    leaving it in the temp dir; refusal still falls back to serial."""
+    import tempfile
+
+    from catme_etl_j_spark.converter import reader as reader_mod
+
+    rows = [["a", "b"]] + [[f"v{i}", i] for i in range(500)]
+    p = write_xlsx(str(tmp_path / "w.xlsx"), {"S": rows})
+    spool_dir = tmp_path / "spools"
+    spool_dir.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(spool_dir))
+    monkeypatch.setattr(reader_mod, "_SLICE_MIN_BYTES", 1)
+
+    def boom(*a, **k):
+        raise RuntimeError("slice scan failed")
+
+    monkeypatch.setattr(reader_mod, "combine_slice_scans", boom)
+    with pytest.raises(RuntimeError, match="slice scan failed"):
+        read_xlsx(spark, p)
+    assert list(spool_dir.iterdir()) == []
+
+    # a refused slice plan also removes its spool and reads serially
+    monkeypatch.setattr(reader_mod, "combine_slice_scans", lambda *a, **k: (None, None))
+    assert read_xlsx(spark, p).count() == 500
+    assert list(spool_dir.iterdir()) == []
+
+
 def test_slice_plan_refuses_unprovable_sheets(tmp_path):
     """plan_row_slices returns None (serial fallback) whenever the scan
     cannot prove slicing exact: comments/CDATA, rows without a

@@ -281,3 +281,12 @@ def test_degenerate_cells_degrade_not_crash():
     assert compile_format("0.00")("1e101") == "1" + "0" * 101 + ".00"
     # percent scaling that overflows to inf degrades to General
     assert isinstance(compile_format("0%")("1.7976931348623157e308"), str)
+    # scientific formats on subnormal cells, whose 10**exp scale would
+    # underflow to 0.0 (ZeroDivisionError) or lose precision
+    for fmt, v, want in [
+        ("0.00E+00", "5e-324", "4.94E-324"),
+        ("##0.0E+0", "5e-324", "4.9E-324"),
+        ("0.00E+00", "3e-321", "3.00E-321"),
+        ("0.00E+00", "2.2e-308", "2.20E-308"),
+    ]:
+        assert compile_format(fmt)(v) == want

@@ -847,12 +847,17 @@ def test_s_core_rounds_are_semi_joins(spark, sf_dir):
     """Every peeling round is alive-set LEFT SEMI equi-joins onto the
     surviving edge list plus a partial-combined strength aggregate —
     no nested-loop join. Pinned on one round's UNtruncated plan
-    (checkpoint=False), since the shipped loop checkpoints both
-    per-round frames (convention #12) and hides the round shape."""
-    from catme_etl_j_spark.operators.graph import _s_core_round, _sym_user_edges
+    (built without the loop driver), since the shipped loop checkpoints
+    both per-round frames (convention #12) and hides the round shape."""
+    from catme_etl_j_spark.operators.graph import (
+        _s_core_prune,
+        _strength,
+        _sym_user_edges,
+    )
 
     edges = _sym_user_edges(spark, sf_dir)
-    alive, nxt, _obs = _s_core_round(edges, 10, checkpoint=False)
+    alive = _strength(edges).filter("s >= 10").select("node")
+    nxt = _s_core_prune(edges, alive)
     plan = formatted_plan(nxt)
     assert "NestedLoop" not in plan
     assert "LeftSemi" in plan
