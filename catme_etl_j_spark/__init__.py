@@ -9,11 +9,11 @@ multimodal columns, streaming).
 
 Layout:
     session      SparkSession factory tuned for local testing, scale-ready configs
-    sources      table loaders + the custom XLSX streaming source
+    sources      table loaders (the XLSX reader lives in converter)
     converter    reference-parity convert() API and sinks (NDJSON / chunked CSV / JSON array)
     operators    relational, dedup, similarity, text, as-of, multimodal operators
-    functions    reusable column-expression helpers (JVM-side; no row UDFs in hot paths)
-    streaming    Structured Streaming slice over the events table
+    functions    deterministic numeric column helpers (rdet, DECIMAL money sums)
+    streaming    event file source + the one memory-sink drain of the stream_* queries
 """
 
 __version__ = "0.1.0"

@@ -509,10 +509,10 @@ def _render_number(value: float, sec: _NumberSection, *, force_sign: bool) -> st
     has_exp = any(k == "exp" for k, _ in sec.tokens)
 
     exp_val = 0
+    step = max(sec.n_int_placeholders, 1)
     if has_exp:
         if x != 0:
             exp_val = math.floor(math.log10(x))
-            step = max(sec.n_int_placeholders, 1)
             exp_val = (exp_val // step) * step
             if exp_val < -300:
                 # 10.0**exp_val would be subnormal (10.02E-321 for
@@ -537,6 +537,12 @@ def _render_number(value: float, sec: _NumberSection, *, force_sign: bool) -> st
         num_str = whole_str
     else:
         s = _round_half_up(x, sec.n_dec)
+        if has_exp and Decimal(s) >= 10**step:
+            # the mantissa rounded up to the next power of ten (9.999e5
+            # -> 10.00): carry into the exponent, as Excel does (1.00E+06)
+            x /= 10.0**step
+            exp_val += step
+            s = _round_half_up(x, sec.n_dec)
         int_part, _, dec_part = s.partition(".")
         if int_part == "0" and sec.min_int == 0 and sec.n_int_placeholders > 0:
             int_part = ""

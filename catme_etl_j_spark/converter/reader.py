@@ -39,6 +39,7 @@ from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -320,21 +321,27 @@ def read_xlsx(
                         for j in range(n_sl)
                     ]
                     sp_path = spool
-                    res = (
-                        spark.sparkContext.parallelize(ranges, len(ranges))
-                        .map(
-                            lambda r: scan_slice_range(
-                                sp_path, r[0], r[1], targets, decl_q, want_width
+                    try:
+                        res = (
+                            spark.sparkContext.parallelize(ranges, len(ranges))
+                            .map(
+                                lambda r: scan_slice_range(
+                                    sp_path, r[0], r[1], targets, decl_q, want_width
+                                )
                             )
+                            .collect()
                         )
-                        .collect()
-                    )
-                    slice_plan, slice_width = combine_slice_scans(
-                        res,
-                        first_row_off=frf,
-                        targets=targets,
-                        want_width=want_width,
-                    )
+                    except Py4JJavaError:
+                        # a failed executor-side scan refuses the slice
+                        # plan like an unprovable sheet: serial read
+                        pass
+                    else:
+                        slice_plan, slice_width = combine_slice_scans(
+                            res,
+                            first_row_off=frf,
+                            targets=targets,
+                            want_width=want_width,
+                        )
         finally:
             if slice_plan is None and spool is not None:
                 with contextlib.suppress(OSError):

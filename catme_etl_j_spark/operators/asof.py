@@ -1,10 +1,11 @@
 """As-of join — an operator Spark lacks natively (SURVEY.md §7.4).
 
 Implemented as a composition of built-in DataFrame ops (preference (a)
-from the custom-operator ladder): a window ``last(..., ignorenulls)``
-over the union of both streams, partitioned by key and ordered by
-time. This is the scale-friendly formulation — one shuffle on
-(key, time), no range-explosion, no per-group pandas — and it matches
+from the custom-operator ladder): one window ``last``/``first(...,
+ignorenulls)`` over both event kinds, partitioned by key and ordered
+by time (``_view_ts``, shared by all four queries). This is the
+scale-friendly formulation — one shuffle on (key, time), no
+range-explosion, no per-group pandas — and it matches
 DuckDB's native ``ASOF JOIN`` semantics exactly: at an equal
 cross-stream timestamp the right-side (view) row sorts first in the
 window, so it IS matched (``<=`` / allow_exact_matches=True).
@@ -33,18 +34,38 @@ def _view_first():
     return F.when(F.col("event_type") == "view", 0).otherwise(1)
 
 
-def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _purchases_and_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").filter(
+    return load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
+
+
+def _view_ts(direction: str):
+    """The as-of match of each row as a column: the ts of the same
+    user's last view at or before it (``backward``: ``last`` over
+    (unbounded preceding, current row)) or first view after it
+    (``forward``: ``first`` over (current row, unbounded following)).
+    Both share one (user; ts, view-first, event_id) order, so the
+    backward match includes an equal-ts view and the forward match
+    excludes it, and Spark evaluates both directions in one window
+    pass."""
+    if direction == "backward":
+        fill, frame = F.last, (W.unboundedPreceding, W.currentRow)
+    else:
+        fill, frame = F.first, (W.currentRow, W.unboundedFollowing)
     w = (
         W.partitionBy("user_id")
         .orderBy("ts", _view_first(), "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        .rowsBetween(*frame)
     )
     view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
-    with_prior = ev.withColumn("last_view_ts", F.last(view_ts, ignorenulls=True).over(w))
+    return fill(view_ts, ignorenulls=True).over(w)
+
+
+def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _purchases_and_views(spark, sf_dir)
+    with_prior = ev.withColumn("last_view_ts", _view_ts("backward"))
     return (
         with_prior.filter(F.col("event_type") == "purchase")
         .filter(F.col("last_view_ts").isNotNull())
@@ -68,61 +89,6 @@ ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
 """
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    by: str,
-    right_cols: list[str] | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Generic backward as-of join: for each left row, attach the last
-    right row with ``right.on <= left.on`` within the same ``by`` key
-    (pd.merge_asof(direction='backward') semantics; left rows with no
-    prior right row keep nulls).
-
-    Spark-first formulation: tag both inputs, union, sort within one
-    window per ``by`` key, forward-fill the right columns with
-    ``last(..., ignorenulls)``, keep left rows. ONE shuffle on the key,
-    no range-join explosion, no per-group pandas — the composition
-    scales like any windowed aggregation.
-
-    Ties (equal ``on``): right rows sort before left rows, so a right
-    row at exactly left.on IS matched — same as merge_asof/ASOF JOIN.
-    """
-    right_cols = right_cols or [c for c in right.columns if c not in (on, by)]
-    lt = left.withColumn("_side", F.lit(1))
-    rt = right.select(
-        F.col(by),
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in right_cols],
-    ).withColumn(f"{on}{suffix}", F.col(on))
-    for c in lt.columns:
-        if c not in rt.columns:
-            rt = rt.withColumn(c, F.lit(None))
-    for c in rt.columns:
-        if c not in lt.columns:
-            lt = lt.withColumn(c, F.lit(None))
-    rt = rt.select(*lt.columns)
-    u = lt.unionByName(rt)
-    w = (
-        W.partitionBy(by)
-        .orderBy(on, "_side")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    filled = u.select(
-        *[c for c in left.columns],
-        "_side",
-        *[
-            F.last(f"{c}{suffix}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
-            for c in right_cols + [on]
-        ],
-    )
-    return filled.filter(F.col("_side") == 1).drop("_side")
-
-
 ASOF_TOLERANCE_S = 3600.0  # 1 hour
 
 
@@ -137,19 +103,10 @@ def asof_purchase_view_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion; the oracle's range join is DuckDB-side only). The gap is
     exact microsecond arithmetic on both engines.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", _view_first(), "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
+    ev = _purchases_and_views(spark, sf_dir)
     gap = F.col("ts").cast("double") - F.col("last_view_ts").cast("double")
     return (
-        ev.withColumn("last_view_ts", F.last(view_ts, ignorenulls=True).over(w))
+        ev.withColumn("last_view_ts", _view_ts("backward"))
         .filter(F.col("event_type") == "purchase")
         .filter(F.col("last_view_ts").isNotNull())
         .filter(gap <= ASOF_TOLERANCE_S)
@@ -189,19 +146,8 @@ def asof_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (strict-after / allow_exact_matches=False), on both engines.
     Same single (user, time)-shuffle scale shape as the backward join.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", _view_first(), "event_id")
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
-    with_next = ev.withColumn(
-        "next_view_ts", F.first(view_ts, ignorenulls=True).over(w)
-    )
+    ev = _purchases_and_views(spark, sf_dir)
+    with_next = ev.withColumn("next_view_ts", _view_ts("forward"))
     return (
         with_next.filter(F.col("event_type") == "purchase")
         .filter(F.col("next_view_ts").isNotNull())
@@ -240,25 +186,10 @@ def asof_nearest_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. backward, match; equal-timestamp views match backward with
     gap 0). Still one shuffle; no range explosion.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("purchase", "view")
+    ev = _purchases_and_views(spark, sf_dir)
+    both = ev.withColumn("prev_ts", _view_ts("backward")).withColumn(
+        "next_ts", _view_ts("forward")
     )
-    order = ["ts", _view_first(), "event_id"]
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy(*order)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wf = (
-        W.partitionBy("user_id")
-        .orderBy(*order)
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
-    both = ev.withColumn(
-        "prev_ts", F.last(view_ts, ignorenulls=True).over(wb)
-    ).withColumn("next_ts", F.first(view_ts, ignorenulls=True).over(wf))
     us = F.unix_micros
     gap_prev = us(F.col("ts")) - us(F.col("prev_ts"))
     gap_next = us(F.col("next_ts")) - us(F.col("ts"))

@@ -759,6 +759,23 @@ FROM v GROUP BY event_type ORDER BY event_type
 
 
 
+def token_count_udf():
+    """Whitespace token count as a scalar Arrow pandas_udf (vectorized
+    pandas str ops). Built lazily (a module-level pandas_udf would
+    create it at import in sessions that never use it)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _n_tok(text):
+        return text.str.split().str.len().astype("int64")
+
+    # real (non-string) hints: this module's `from __future__ import
+    # annotations` would stringify inline hints, which pandas_udf's
+    # signature inference rejects
+    _n_tok.__annotations__ = {"text": pd.Series, "return": pd.Series}
+    return pandas_udf(_n_tok, "long")
+
+
 def fn_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar Arrow pandas_udf ON the hash gate — completing the
     gated UDF ladder (grouped-map embed_group_stats, mapInPandas
@@ -773,12 +790,9 @@ def fn_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     query exists to pin the Arrow scalar-UDF path's correctness, not
     to recommend it.
     """
-    from catme_etl_j_spark.functions.udfs import token_count_udf
-    from catme_etl_j_spark.sources.tables import load_table as _lt
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    docs = _lt(spark, sf_dir, "documents")
-    toks = docs.select("source", token_count_udf("text").alias("n_tok"))
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select("source", token_count_udf()("text").alias("n_tok"))
     return (
         toks.groupBy("source")
         .agg(

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 
 from catme_etl_j_spark.functions.numeric import dec2, money2
 from catme_etl_j_spark.operators.events import _SLIDING_SQL, _TS_FMT, _TUMBLING_SQL
+from catme_etl_j_spark.streaming.events import (
+    WATERMARK,
+    drain_to_memory,
+    read_event_stream,
+)
 
 _seq = itertools.count()
 
@@ -31,24 +36,13 @@ _seq = itertools.count()
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts/sums per event type, computed by the
     streaming engine (complete mode) over the events files."""
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         money2(F.sum(dec2("value"))).alias("sum_value"), F.count("*").alias("n")
     )
-    name = f"streamq_tumbling_{next(_seq)}"  # fresh sink per invocation
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    snap, _ = drain_to_memory(agg, "complete")
+    return snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "sum_value",
@@ -60,24 +54,13 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-min windows sliding every 15 min, computed by the streaming
     engine (complete mode, availableNow) — same oracle as the batch
     twin events_sliding_window."""
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w")).agg(
         F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value")
     )
-    name = f"streamq_sliding_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    snap, _ = drain_to_memory(agg, "complete")
+    return snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"), "n", "sum_value"
     )
 
@@ -95,25 +78,14 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming one (half-open window) — with nanosecond event times an
     exact 1800.000000000s delta does not occur in the data.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
     agg = ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id").agg(
         F.count("*").alias("n_events"),
         money2(F.sum(dec2("value"))).alias("sum_value"),
     )
-    name = f"streamq_session_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
+    snap, _ = drain_to_memory(agg, "complete")
+    return snap.select(
         "user_id",
         F.date_format("w.start", _TS_FMT).alias("session_start"),
         F.date_format(
@@ -169,8 +141,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
 
@@ -195,22 +165,12 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    name = f"streamq_stateful_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    snap, _ = drain_to_memory(agg, "update")
     # One emission per user per touched micro-batch; the final state has
     # the max running n_events (monotone), so max(struct) picks it even
     # if the source ever splits into multiple batches.
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        snap.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("m"))
         .select("user_id", F.col("m.n_events").alias("n_events"), F.col("m.sum_value").alias("sum_value"))
     )
@@ -237,8 +197,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     that final rollup runs in batch on the sink table, keeping the
     streaming part exactly the join under test.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     clicks = (
         read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -262,19 +220,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AND click_ts >= ts - INTERVAL 30 MINUTES"
         ),
     )
-    name = f"streamq_ssjoin_{next(_seq)}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    snap, _ = drain_to_memory(joined, "append")
     return (
-        spark.table(name)
-        .groupBy("event_id", "user_id", "ts")
+        snap.groupBy("event_id", "user_id", "ts")
         .agg(
             F.count("*").alias("n_clicks_30m"),
             F.max("click_ts").alias("last_click"),
@@ -318,8 +266,6 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest (Kafka replays, file re-drops): state is sharded by
     event_id and bounded by the watermark window.
     """
-    from catme_etl_j_spark.streaming.events import WATERMARK, read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     s1 = read_event_stream(spark, sf_dir, glob="events.parquet")
     s2 = read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -328,19 +274,9 @@ def stream_dedup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    name = f"streamq_dedup_{next(_seq)}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    snap, _ = drain_to_memory(deduped, "append")
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        snap.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
@@ -455,17 +391,8 @@ def run_late_stream(spark: SparkSession, sf_dir: str):
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), money2(F.sum(dec2("value"))).alias("sum_value"))
     )
-    name = f"streamq_late_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    out = spark.table(name).select(
+    snap, q = drain_to_memory(agg, "append")
+    out = snap.select(
         F.date_format("w.start", _TS_FMT).alias("window_start"),
         "event_type",
         "n",
@@ -624,7 +551,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash gate.
     """
     from catme_etl_j_spark.sources.tables import load_table
-    from catme_etl_j_spark.streaming.events import read_event_stream
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_event_stream(spark, sf_dir, glob="events.parquet")
@@ -639,19 +565,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
     )
-    name = f"streamq_enrich_{next(_seq)}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select(
-        "c_mktsegment", "event_type", "n", "sum_value"
-    )
+    snap, _ = drain_to_memory(agg, "complete")
+    return snap.select("c_mktsegment", "event_type", "n", "sum_value")
 
 
 _STATIC_ENRICH_SQL = """
@@ -681,8 +596,6 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain batch SQL — equality proves the state backend swap
     changes storage only, never semantics.
     """
-    from catme_etl_j_spark.streaming.events import read_event_stream
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = "spark.sql.streaming.stateStore.providerClass"
     try:
@@ -699,22 +612,13 @@ def stream_rocksdb_daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
-        name = f"streamq_rocksdb_{next(_seq)}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        snap, _ = drain_to_memory(agg, "complete")
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-    return spark.table(name).select("day", "event_type", "n", "sum_value")
+    return snap.select("day", "event_type", "n", "sum_value")
 
 
 _ROCKSDB_SQL = """
@@ -765,30 +669,19 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run_once(name: str) -> int:
+    def run_once() -> tuple[DataFrame, int]:
         ev = spark.readStream.schema(schema).parquet(src)
         agg = ev.groupBy("event_type").agg(
             F.count("*").alias("n"),
             money2(F.sum(dec2("value"))).alias("sum_value"),
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        rows = sum(int(p["numInputRows"]) for p in q.recentProgress)
-        q.stop()
-        return rows
+        snap, q = drain_to_memory(agg, "complete", checkpoint_dir=cp)
+        return snap, sum(int(p["numInputRows"]) for p in q.recentProgress)
 
-    rows_a = run_once(f"streamq_ckpt_a_{next(_seq)}")  # batch A, then STOP
+    _, rows_a = run_once()  # batch A, then STOP
     shutil.copy(f"{fixture}/b_second.parquet", f"{src}/b_second.parquet")
-    final = f"streamq_ckpt_b_{next(_seq)}"
-    rows_b = run_once(final)  # recovery: offsets + state restored, B only
-    out = spark.table(final).select("event_type", "n", "sum_value")
+    snap, rows_b = run_once()  # recovery: offsets + state restored, B only
+    out = snap.select("event_type", "n", "sum_value")
     result = out.collect()
     shutil.rmtree(root, ignore_errors=True)
     total = sum(r["n"] for r in result)

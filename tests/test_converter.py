@@ -276,6 +276,18 @@ def test_failed_slice_scan_leaves_no_spool(spark, tmp_path, monkeypatch):
     assert read_xlsx(spark, p).count() == 500
     assert list(spool_dir.iterdir()) == []
 
+    # so does a failed slice-scan job (the scan raises on the executors)
+    from catme_etl_j_spark.converter.xlsx import combine_slice_scans
+
+    monkeypatch.setattr(reader_mod, "combine_slice_scans", combine_slice_scans)
+
+    def scan_fails(*a, **k):
+        raise RuntimeError("executor scan failed")
+
+    monkeypatch.setattr(reader_mod, "scan_slice_range", scan_fails)
+    assert read_xlsx(spark, p).count() == 500
+    assert list(spool_dir.iterdir()) == []
+
 
 def test_slice_plan_refuses_unprovable_sheets(tmp_path):
     """plan_row_slices returns None (serial fallback) whenever the scan
@@ -509,3 +521,45 @@ def test_bigsheet_conversion_bounded_memory():
         f"— the bounded-memory invariant regressed (peaks: {peaks})"
     )
     os.remove("/tmp/bigsheet_test.ndjson")
+
+
+def _two_sheet_fixture(tmp_path):
+    return write_xlsx(
+        str(tmp_path / "multi.xlsx"),
+        {
+            "alpha": [["k", "v"], ["a1", "1"], ["a2", "2"]],
+            "beta": [["k", "v"], ["b1", "3"]],
+        },
+    )
+
+
+def test_reader_multi_sheet_star(spark, tmp_path):
+    p = _two_sheet_fixture(tmp_path)
+    df = read_xlsx(spark, p, sheet_name="*")
+    assert df.columns[:4] == ["_file", "_sheet_idx", "_sheet", "_row_idx"]
+    rows = sorted(
+        (r["_sheet_idx"], r["_sheet"], r["k"], r["v"]) for r in df.collect()
+    )
+    assert rows == [
+        (0, "alpha", "a1", "1"),
+        (0, "alpha", "a2", "2"),
+        (1, "beta", "b1", "3"),
+    ]
+
+
+def test_reader_multi_sheet_list(spark, tmp_path):
+    p = _two_sheet_fixture(tmp_path)
+    df = read_xlsx(spark, p, sheet_name=["beta"])
+    rows = [(r["_sheet_idx"], r["_sheet"], r["k"]) for r in df.collect()]
+    assert rows == [(0, "beta", "b1")]
+
+
+def test_multi_sheet_convert_ndjson_order(spark, tmp_path):
+    """Ordered single-file NDJSON preserves (file, sheet, row) order."""
+    p = _two_sheet_fixture(tmp_path)
+    out = str(tmp_path / "o.ndjson")
+    result = convert(p, "NDJSON", out, sheet_name="*", spark=spark)
+    assert result.rows_written == 3
+    lines = [ln for ln in open(out).read().splitlines() if ln]
+    keys = [json.loads(ln)["k"] for ln in lines]
+    assert keys == ["a1", "a2", "b1"]

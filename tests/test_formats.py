@@ -58,6 +58,11 @@ from catme_etl_j_spark.converter.xlsx_writer import Styled, write_xlsx
         ("0.00E+00", "12345.678", "1.23E+04"),
         ("0.00E+00", "0.00012345", "1.23E-04"),
         ("##0.0E+0", "12345.678", "12.3E+3"),
+        # a mantissa that rounds up to the next power of ten carries
+        ("0.00E+00", "999900", "1.00E+06"),
+        ("0E+0", "9.6", "1E+1"),
+        ("##0.0E+0", "999.96", "1.0E+3"),
+        ("0.00E+00", "-0.0099999", "-1.00E-02"),
         ("# ?/?", "5.25", "5 1/4"),
         ("# ??/??", "5.3", "5 3/10"),
         # sections, scaling, literals

@@ -1,48 +1,15 @@
 """Pandas-UDF patterns vs their built-in twins."""
 
-import math
-
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from catme_etl_j_spark.functions.udfs import log1p_price, token_count_udf, zscore_per_group
+from catme_etl_j_spark.operators.relational2 import token_count_udf
 from catme_etl_j_spark.sources.tables import load_table
-
-
-def test_scalar_pandas_udf_matches_builtin(spark, sf_dir):
-    part = load_table(spark, sf_dir, "part")
-    rows = part.select(
-        log1p_price("p_retailprice").alias("udf"),
-        F.log1p("p_retailprice").alias("builtin"),
-    ).collect()
-    assert all(math.isclose(r["udf"], r["builtin"], rel_tol=1e-12) for r in rows)
 
 
 def test_token_count_udf_matches_builtin(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     rows = docs.select(
-        token_count_udf("text").alias("udf"),
+        token_count_udf()("text").alias("udf"),
         F.size(F.split(F.trim("text"), " +")).cast("long").alias("builtin"),
     ).collect()
     assert all(r["udf"] == r["builtin"] for r in rows)
-
-
-def test_zscore_applyinpandas_matches_window(spark, sf_dir):
-    cust = load_table(spark, sf_dir, "customer")
-    got = {
-        r["c_custkey"]: r["zscore"]
-        for r in zscore_per_group(cust, "c_nationkey", "c_acctbal").collect()
-    }
-    w = W.partitionBy("c_nationkey")
-    want = {
-        r["c_custkey"]: r["z"]
-        for r in cust.select(
-            "c_custkey",
-            (
-                (F.col("c_acctbal") - F.avg("c_acctbal").over(w))
-                / F.stddev_pop("c_acctbal").over(w)
-            ).alias("z"),
-        ).collect()
-    }
-    assert got.keys() == want.keys()
-    assert all(math.isclose(got[k], want[k], rel_tol=1e-9, abs_tol=1e-9) for k in got)

@@ -86,10 +86,13 @@ def main() -> None:
             run_once(True)
         cm = sorted(cons)[len(cons) // 2]
         sm = sorted(snap)[len(snap) // 2]
-        timings[name] = round(cm + sm, 3)
+        totals = [round(c + s, 3) for c, s in zip(cons, snap)]
+        # median of the per-run totals, not the sum of the phase medians
+        # (those can come from different runs)
+        timings[name] = sorted(totals)[len(totals) // 2]
         timings[f"{name}.construct"] = cm
         timings[f"{name}.snapshot"] = sm
-        raw[name] = [round(c + s, 3) for c, s in zip(cons, snap)]
+        raw[name] = totals
         raw[f"{name}.construct"] = cons
         raw[f"{name}.snapshot"] = snap
         print(f"# {name}: construct={cm}s snapshot={sm}s", file=sys.stderr)
