@@ -28,7 +28,7 @@ import calendar
 import math
 import re
 from datetime import date, timedelta
-from decimal import ROUND_HALF_UP, Decimal, localcontext
+from decimal import Decimal
 from fractions import Fraction
 from xml.etree.ElementTree import iterparse
 
@@ -129,6 +129,8 @@ def format_general(raw: str) -> str:
         f = float(raw)
     except ValueError:
         return raw
+    if not math.isfinite(f):
+        return raw  # "nan", "1e400": no finite number to print
     if f == int(f) and abs(f) < 1e16:
         return str(int(f))
     return repr(f)
@@ -272,13 +274,14 @@ def _resolve_months(toks: list[tuple[str, str]]) -> list[tuple[str, str]]:
     return out
 
 
-def _render_date(serial: float, toks: list[tuple[str, str]], date1904: bool = False) -> str:
+def _render_date(
+    serial: float, toks: list[tuple[str, str]], twelve_hour: bool, date1904: bool
+) -> str:
     whole, ms = _split_serial(serial)
     d = serial_to_date(whole, date1904) if (whole > 0 or date1904) else None
     sec_of_day, milli = divmod(ms, 1000)
     hour24, rem = divmod(sec_of_day, 3600)
     minute, second = divmod(rem, 60)
-    twelve_hour = any(k == "ampm" for k, _ in toks)
     out: list[str] = []
     for k, text in toks:
         ln = len(text)
@@ -359,12 +362,14 @@ def _split_sections(code: str) -> list[str]:
 
 
 class _NumberSection:
-    """One analyzed section of a number format code."""
+    """One analyzed section of a number format code, with everything the
+    renderer needs that depends only on the code worked out here once."""
 
     __slots__ = (
         "tokens", "n_dec", "min_int", "grouping", "percents",
         "scale_commas", "exp_plus", "n_exp", "n_int_placeholders",
-        "frac_den_digits",
+        "frac_den_digits", "has_frac", "has_exp", "has_whole", "has_at",
+        "pct_mul", "comma_div", "prefix", "middle", "suffix",
     )
 
     def __init__(self, section: str) -> None:
@@ -461,6 +466,41 @@ class _NumberSection:
             else:
                 self.tokens.append(("lit", ch))
                 i += 1
+        self._compile()
+
+    def _compile(self) -> None:
+        kinds = {k for k, _ in self.tokens}
+        self.has_frac = "slash" in kinds
+        self.has_exp = "exp" in kinds
+        self.has_whole = "num" in kinds
+        self.has_at = "at" in kinds
+        self.pct_mul = 100.0**self.percents
+        self.comma_div = 1000.0**self.scale_commas
+        # Output layout: the digits once at the first int/decimal
+        # cluster, the fraction once at the first fraction token, the
+        # exponent and the General text of '@' at each of theirs. Split
+        # into the literal text before the first slot, after the last,
+        # and a str.format template for the span between them (None
+        # when that span is just the digits).
+        parts: list[tuple[bool, str]] = []
+        for k, text in self.tokens:
+            if k == "lit":
+                parts.append((False, text))
+            elif k == "exp" or k == "at":
+                parts.append((True, "{e}" if k == "exp" else "{a}"))
+            elif k == "num" and (True, "{n}") not in parts:
+                parts.append((True, "{n}"))
+            elif k in ("fracnum", "slash", "fracden") and (True, "{f}") not in parts:
+                parts.append((True, "{f}"))
+        slots = [i for i, (is_slot, _) in enumerate(parts) if is_slot]
+        first, last = (slots[0], slots[-1] + 1) if slots else (len(parts), len(parts))
+        self.prefix = "".join(t for _, t in parts[:first])
+        self.suffix = "".join(t for _, t in parts[last:])
+        middle = "".join(
+            t if is_slot else t.replace("{", "{{").replace("}", "}}")
+            for is_slot, t in parts[first:last]
+        )
+        self.middle = None if middle == "{n}" else middle
 
     def _analyze_int(self, cluster: str) -> None:
         digits = [c for c in cluster if c in "0#?"]
@@ -481,63 +521,60 @@ def _group(int_str: str) -> str:
 
 
 def _round_half_up(x: float, n_dec: int) -> str:
-    """Half-up rounding on the double's shortest decimal repr — matches
-    Java DecimalFormat (which POI's DataFormatter delegates to): 1.005d
-    prints as "1.005" and rounds to "1.01", even though the binary value
-    is slightly below the half-boundary."""
-    # Context wide enough for any double (<= 309 integer digits) plus the
-    # asked decimals: the default 28-digit context raises InvalidOperation
-    # on ~1e100 magnitudes, where Java's unlimited BigDecimal just prints.
-    with localcontext() as ctx:
-        ctx.prec = 350 + max(n_dec, 0)
-        q = Decimal(repr(x)).quantize(
-            Decimal(1).scaleb(-n_dec), rounding=ROUND_HALF_UP
-        )
-    return f"{q:.{n_dec}f}"
+    """Half-up rounding of ``x >= 0`` on the double's shortest decimal
+    repr — matches Java DecimalFormat (which POI's DataFormatter
+    delegates to): 1.005d prints as "1.005" and rounds to "1.01", even
+    though the binary value is slightly below the half-boundary. Exact
+    on the digit string, so any magnitude prints in full, as Java's
+    unlimited BigDecimal does."""
+    r = repr(x)
+    if "e" in r:  # 1e+16, 5e-324: the same decimal in plain digits
+        r = f"{Decimal(r):f}"
+    ip, _, fp = r.partition(".")
+    if len(fp) <= n_dec:
+        return f"{ip}.{fp:0<{n_dec}}" if n_dec else ip
+    digits = ip + fp[:n_dec]
+    if fp[n_dec] >= "5":
+        digits = str(int(digits) + 1).zfill(len(digits))
+    return f"{digits[:-n_dec]}.{digits[-n_dec:]}" if n_dec else digits
 
 
 def _render_number(value: float, sec: _NumberSection, *, force_sign: bool) -> str:
     x = abs(value)
-    x *= 100.0**sec.percents
-    x /= 1000.0**sec.scale_commas
+    x *= sec.pct_mul
+    x /= sec.comma_div
     if not math.isfinite(x):
         # percent scaling can overflow a near-DBL_MAX cell to inf;
-        # degrade like the date paths instead of crashing quantize
+        # degrade like the date paths instead of crashing the rounding
         return format_general(repr(value))
-
-    has_frac = any(k == "slash" for k, _ in sec.tokens)
-    has_exp = any(k == "exp" for k, _ in sec.tokens)
 
     exp_val = 0
     step = max(sec.n_int_placeholders, 1)
-    if has_exp:
-        if x != 0:
-            exp_val = math.floor(math.log10(x))
-            exp_val = (exp_val // step) * step
-            if exp_val < -300:
-                # 10.0**exp_val would be subnormal (10.02E-321 for
-                # 1e-320) or underflow to 0.0 (subnormal cells):
-                # scale in two normal-range steps
-                x = x * 1e300 / 10.0 ** (exp_val + 300)
-            else:
-                x = x / (10.0**exp_val)
+    if sec.has_exp and x != 0:
+        exp_val = math.floor(math.log10(x))
+        exp_val = (exp_val // step) * step
+        if exp_val < -300:
+            # 10.0**exp_val would be subnormal (10.02E-321 for
+            # 1e-320) or underflow to 0.0 (subnormal cells):
+            # scale in two normal-range steps
+            x = x * 1e300 / 10.0 ** (exp_val + 300)
+        else:
+            x = x / (10.0**exp_val)
 
-    whole_str = frac_str = ""
-    if has_frac:
+    frac_str = ""
+    if sec.has_frac:
         max_den = 10**max(sec.frac_den_digits, 1) - 1
-        has_whole = any(k == "num" for k, _ in sec.tokens)
-        if has_whole:
+        if sec.has_whole:
             whole = int(x)
             fr = Fraction(x - whole).limit_denominator(max_den)
-            whole_str = str(whole)
+            num_str = str(whole)
         else:
             fr = Fraction(x).limit_denominator(max_den)
-            whole_str = ""
+            num_str = ""
         frac_str = f"{fr.numerator}/{fr.denominator}" if fr.numerator else ""
-        num_str = whole_str
     else:
         s = _round_half_up(x, sec.n_dec)
-        if has_exp and Decimal(s) >= 10**step:
+        if sec.has_exp and len(s.partition(".")[0]) > step:
             # the mantissa rounded up to the next power of ten (9.999e5
             # -> 10.00): carry into the exponent, as Excel does (1.00E+06)
             x /= 10.0**step
@@ -551,28 +588,15 @@ def _render_number(value: float, sec: _NumberSection, *, force_sign: bool) -> st
             int_part = _group(int_part)
         num_str = int_part + ("." + dec_part if sec.n_dec else "")
 
-    out: list[str] = []
-    if force_sign and value < 0:
-        out.append("-")
-    emitted_num = False
-    emitted_fracnum = False
-    for k, text in sec.tokens:
-        if k == "num":
-            if not emitted_num:
-                out.append(num_str)
-                emitted_num = True
-        elif k == "exp":
+    if sec.middle is not None:
+        exp_str = ""
+        if sec.has_exp:
             sign = "+" if exp_val >= 0 and sec.exp_plus else ("-" if exp_val < 0 else "")
-            out.append(f"E{sign}{abs(exp_val):0{max(sec.n_exp, 1)}d}")
-        elif k in ("fracnum", "slash", "fracden"):
-            if not emitted_fracnum:
-                out.append(frac_str)
-                emitted_fracnum = True
-        elif k == "lit":
-            out.append(text)
-        elif k == "at":
-            out.append(format_general(repr(value)))
-    return "".join(out)
+            exp_str = f"E{sign}{abs(exp_val):0{max(sec.n_exp, 1)}d}"
+        at_str = format_general(repr(value)) if sec.has_at else ""
+        num_str = sec.middle.format(n=num_str, e=exp_str, f=frac_str, a=at_str)
+    sign = "-" if force_sign and value < 0 else ""
+    return sign + sec.prefix + num_str + sec.suffix
 
 
 # ------------------------------------------------------------- compiler
@@ -587,6 +611,7 @@ def compile_format(code: str, *, date1904: bool = False):
         return format_general
     if is_date_format(code):
         toks = _resolve_months(_tokenize_date(code))
+        twelve_hour = any(k == "ampm" for k, _ in toks)
         # Serial for 10000-01-01: dates render only up to 9999-12-31
         # (POI DateUtil.isValidExcelDate's upper bound). Beyond it Excel
         # shows #### — degrade to General exactly like the negative
@@ -598,9 +623,9 @@ def compile_format(code: str, *, date1904: bool = False):
                 serial = float(raw)
             except ValueError:
                 return raw
-            if serial < 0 or serial >= max_serial:
+            if not 0 <= serial < max_serial:  # NaN too
                 return format_general(raw)  # Excel shows #### ; degrade
-            return _render_date(serial, toks, date1904)
+            return _render_date(serial, toks, twelve_hour, date1904)
 
         return render_date
 

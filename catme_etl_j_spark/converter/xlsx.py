@@ -1002,6 +1002,9 @@ def max_col_from_xml_file(path: str) -> int | None:
 # as the behavioral reference the unit tests compare against.
 
 _SCAN_OVERLAP = 4096  # > max row-number digits and the width scan's tag carry
+# one read of scan_slice_range: a task's memory is one window, whatever
+# the size of its range (the serial width scan reads 1 MiB at a time too)
+SCAN_WINDOW_BYTES = 1 << 20
 
 
 def parse_decl_head(head: bytes) -> tuple[bool, int | None]:
@@ -1037,31 +1040,18 @@ def scan_slice_range(
     START inside [lo, hi) count; the overlap read past ``hi`` lets
     needles, row-number digits and cell tags that straddle the range
     edge resolve here without being double-counted by the next range.
-    Returns a plain picklable dict for :func:`combine_slice_scans`."""
-    n = hi - lo
-    with open(spool_path, "rb") as f:
-        f.seek(lo)
-        buf = f.read(n + _SCAN_OVERLAP)
-    limit = min(n, len(buf))
-
-    def first_pos(needle: bytes, from_: int = 0) -> int | None:
-        p = buf.find(needle, from_)
-        return p if 0 <= p < limit else None
-
-    q0 = buf.find(b"<?")
-    if q0 >= 0 and decl_q_pos is not None and lo + q0 == decl_q_pos:
-        q0 = buf.find(b"<?", q0 + 1)
-    last_loose = buf.rfind(_ROW_SUPER_NEEDLE, 0, limit + len(_ROW_SUPER_NEEDLE) - 1)
+    The range is read in ``SCAN_WINDOW_BYTES`` windows, each with the
+    same overlap and the same start-inside rule, so a task holds one
+    window, not its whole range. Returns a plain picklable dict for
+    :func:`combine_slice_scans`."""
     out = {
         "lo": lo,
-        "n_loose": buf.count(_ROW_SUPER_NEEDLE, 0, limit + len(_ROW_SUPER_NEEDLE) - 1),
-        "n_rfirst": sum(
-            buf.count(nd, 0, limit + len(nd) - 1) for nd in _ROW_RFIRST_NEEDLES
-        ),
-        "bang": first_pos(b"<!"),
-        "qm": q0 if 0 <= q0 < limit else None,
-        "sd": first_pos(b"</sheetData"),
-        "last_loose": lo + last_loose if last_loose >= 0 else None,
+        "n_loose": 0,
+        "n_rfirst": 0,
+        "bang": None,
+        "qm": None,
+        "sd": None,
+        "last_loose": None,
         "first_rf": None,
         "first_rf_rn": None,
         "bad_first_digits": False,
@@ -1070,50 +1060,78 @@ def scan_slice_range(
     # Walk strict row starts only as far as needed: the range's first
     # one (digit-checked, as the serial scanner does for the sheet's
     # first row) and one per in-range target.
-    tq = sorted(t - lo for t in targets if lo <= t < hi)
-    pos = 0
-    while True:
-        best, blen = -1, 0
-        for nd in _ROW_RFIRST_NEEDLES:
-            p = buf.find(nd, pos)
-            if p >= 0 and (best < 0 or p < best):
-                best, blen = p, len(nd)
-        if best < 0 or best >= limit:
-            break
-        q = best + blen
-        e = q
-        while e < len(buf) and buf[e : e + 1].isdigit():
-            e += 1
-        if e == q:
-            if out["first_rf"] is None:
-                # a digit-less first row start refuses the whole plan
-                # (the serial scanner's find_row_start contract)
-                out["bad_first_digits"] = True
-                out["first_rf"] = lo + best
-            pos = best + 1
-            continue
-        rn = int(buf[q:e])
-        if out["first_rf"] is None:
-            out["first_rf"], out["first_rf_rn"] = lo + best, rn
-        while tq and tq[0] <= best:
-            out["bounds"][lo + tq.pop(0)] = (lo + best, rn)
-        if not tq and out["first_rf"] is not None:
-            break
-        pos = best + 1
+    tq = sorted(t for t in targets if lo <= t < hi)
+    walking = True
+    cell_open = re.compile(rb"<c[\s/>]")
+    cell_ref = re.compile(rb'<c\b[^>]*?\br="([A-Z]+)[0-9]+"')
+    n_open = n_ref = 0
+    letters_seen: set[bytes] = set()
+    loose_len = len(_ROW_SUPER_NEEDLE)
+    with open(spool_path, "rb") as f:
+        for w_lo in range(lo, hi, SCAN_WINDOW_BYTES):
+            f.seek(w_lo)
+            buf = f.read(min(SCAN_WINDOW_BYTES, hi - w_lo) + _SCAN_OVERLAP)
+            limit = min(SCAN_WINDOW_BYTES, hi - w_lo, len(buf))
+            rel = w_lo - lo  # first positions are relative to lo
+            out["n_loose"] += buf.count(_ROW_SUPER_NEEDLE, 0, limit + loose_len - 1)
+            out["n_rfirst"] += sum(
+                buf.count(nd, 0, limit + len(nd) - 1) for nd in _ROW_RFIRST_NEEDLES
+            )
+            for key, needle in (("bang", b"<!"), ("sd", b"</sheetData")):
+                if out[key] is None:
+                    p = buf.find(needle)
+                    out[key] = rel + p if 0 <= p < limit else None
+            if out["qm"] is None:
+                q0 = buf.find(b"<?")
+                if q0 >= 0 and decl_q_pos is not None and w_lo + q0 == decl_q_pos:
+                    q0 = buf.find(b"<?", q0 + 1)
+                out["qm"] = rel + q0 if 0 <= q0 < limit else None
+            last_loose = buf.rfind(_ROW_SUPER_NEEDLE, 0, limit + loose_len - 1)
+            if last_loose >= 0:
+                out["last_loose"] = w_lo + last_loose
+            pos = 0
+            while walking:
+                best, blen = -1, 0
+                for nd in _ROW_RFIRST_NEEDLES:
+                    p = buf.find(nd, pos)
+                    if p >= 0 and (best < 0 or p < best):
+                        best, blen = p, len(nd)
+                if best < 0 or best >= limit:
+                    break
+                q = best + blen
+                e = q
+                while e < len(buf) and buf[e : e + 1].isdigit():
+                    e += 1
+                if e == q:
+                    if out["first_rf"] is None:
+                        # a digit-less first row start refuses the whole
+                        # plan (the serial scanner's find_row_start contract)
+                        out["bad_first_digits"] = True
+                        out["first_rf"] = w_lo + best
+                    pos = best + 1
+                    continue
+                rn = int(buf[q:e])
+                if out["first_rf"] is None:
+                    out["first_rf"], out["first_rf_rn"] = w_lo + best, rn
+                while tq and tq[0] <= w_lo + best:
+                    out["bounds"][tq.pop(0)] = (w_lo + best, rn)
+                walking = bool(tq) or out["first_rf"] is None
+                pos = best + 1
+            if want_width:
+                # tags that start before the window's limit end before the
+                # first '<' at or after it (markup holds no raw '<')
+                cut = buf.find(b"<", limit)
+                cut = len(buf) if cut < 0 else cut
+                n_open += len(cell_open.findall(buf, 0, cut))
+                refs = cell_ref.findall(buf, 0, cut)
+                n_ref += len(refs)
+                letters_seen.update(refs)
     if want_width:
-        cell_open = re.compile(rb"<c[\s/>]")
-        cell_ref = re.compile(rb'<c\b[^>]*?\br="([A-Z]+)[0-9]+"')
-        n_open = sum(1 for m in cell_open.finditer(buf) if m.start() < limit)
-        n_ref = 0
-        max_col = -1
-        for m in cell_ref.finditer(buf):
-            if m.start() >= limit:
-                continue
-            n_ref += 1
-            c = _col_letters_to_index(m.group(1).decode("ascii"))
-            if c > max_col:
-                max_col = c
-        out["n_open"], out["n_ref"], out["max_col"] = n_open, n_ref, max_col
+        out["n_open"], out["n_ref"] = n_open, n_ref
+        out["max_col"] = max(
+            (_col_letters_to_index(s.decode("ascii")) for s in letters_seen),
+            default=-1,
+        )
     return out
 
 

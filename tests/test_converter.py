@@ -176,7 +176,9 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
     scan_slice_range + combine_slice_scans — what the reader fans out
     as one Spark job) must produce EXACTLY the serial plan_row_slices
     plan, the same strict width, and the same refusals on the pinned
-    unprovable variants."""
+    unprovable variants — also when the read windows are small enough
+    to split rows, cell tags and row numbers, where each range's result
+    must equal its one-window scan."""
     import re as _re
     import zipfile as _zip
 
@@ -193,7 +195,7 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
     # shrink the slice floor so the small fixture actually multi-slices
     monkeypatch.setattr(xlsx_mod, "SLICE_TARGET_BYTES", 1024)
 
-    def parallel_plan(path: str, n_slices: int, want_width: bool = True):
+    def parallel_plan(path: str, n_slices: int, want_width: bool = True, window=None):
         spool = str(tmp_path / "spool.xml")
         with XlsxWorkbook(path) as wb:
             meta = wb.spool_sheet(spool_path=spool)
@@ -213,6 +215,14 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
             scan_slice_range(spool, lo, hi, targets, decl_q, want_width)
             for lo, hi in ranges
         ]
+        if window is not None:
+            with monkeypatch.context() as m:
+                m.setattr(xlsx_mod, "SCAN_WINDOW_BYTES", window)
+                windowed = [
+                    scan_slice_range(spool, lo, hi, targets, decl_q, want_width)
+                    for lo, hi in ranges
+                ]
+            assert windowed == res
         return combine_slice_scans(
             res, first_row_off=frf, targets=targets, want_width=want_width
         )
@@ -221,9 +231,12 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
         with XlsxWorkbook(p) as wb:
             serial = wb.plan_row_slices(None, None, n_slices=n_sl, min_bytes=1)
             serial_width = wb.sheet_max_col()
-        slices, width = parallel_plan(p, n_sl)
-        assert slices == serial and len(slices) >= 2
-        assert width == serial_width
+        # rows here are ~100 bytes: 61-byte windows split every row and
+        # many tags, 1000-byte ones fall anywhere in a row
+        for window in (None, 61, 1000):
+            slices, width = parallel_plan(p, n_sl, window=window)
+            assert slices == serial and len(slices) >= 2
+            assert width == serial_width
 
     # refusal parity on the pinned unprovable variants
     src = _zip.ZipFile(p)
@@ -241,11 +254,12 @@ def test_parallel_slice_scan_matches_serial(tmp_path, monkeypatch):
     cmt = variant(
         "c.xlsx", lambda d: d.replace(b"<sheetData>", b"<sheetData><!-- x -->", 1)
     )
-    assert parallel_plan(cmt, 4) == (None, None)
     nor = variant(
         "r.xlsx", lambda d: _re.sub(rb'<row r="7"[^>]*>', b"<row>", d, count=1)
     )
-    assert parallel_plan(nor, 4) == (None, None)
+    for window in (None, 61):
+        assert parallel_plan(cmt, 4, window=window) == (None, None)
+        assert parallel_plan(nor, 4, window=window) == (None, None)
 
 
 def test_failed_slice_scan_leaves_no_spool(spark, tmp_path, monkeypatch):
@@ -424,20 +438,23 @@ def test_bigsheet_conversion_bounded_memory():
     tested, multi-GB designed'; contract :98/:220-225): converting a
     single sheet whose XML is ~492 MB (1.2M rows x 8 cols) must keep
     the PARSING TASK's peak RSS bounded far below the inflated sheet —
-    the local path mode opens the archive from disk and iterparse
-    carries only O(batch) state. Measured 184 MB worker peak at
-    492 MB XML (and ~the same at half the rows — flat, not
-    proportional); pinned at 320 MB to absorb allocator noise. The
-    conversion itself must produce every row."""
+    the local path mode opens the archive from disk and the expat parser
+    carries only O(batch) state, and the slice scan reads its byte range
+    in 1 MiB windows. Measured 182-183 MB worker peak at 492 MB XML on
+    4 cores; pinned at 320 MB to absorb allocator noise.
+    The conversion itself must produce every row. The converting process
+    and its Python workers both import the package from this checkout."""
     import os
     import subprocess
     import sys
     import threading
     import time
+    from pathlib import Path
 
-    fixture = "/root/repo/.scaledata/bigsheet.xlsx"
+    root = Path(__file__).resolve().parents[1]
+    fixture = str(root / ".scaledata" / "bigsheet.xlsx")
     if not os.path.exists(fixture):
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, str(root / "tools"))
         import gen_bigxlsx
 
         gen_bigxlsx.generate(fixture)
@@ -479,9 +496,13 @@ def test_bigsheet_conversion_bounded_memory():
             return ""
 
     peaks: dict = {}
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        [str(root)] + ([env["PYTHONPATH"]] if env.get("PYTHONPATH") else [])
+    )
     proc = subprocess.Popen(
         [sys.executable, "-c", (
-            "import sys; sys.path.insert(0, '/root/repo')\n"
+            f"import sys; sys.path.insert(0, {str(root)!r})\n"
             "from catme_etl_j_spark.converter.api import convert\n"
             f"r = convert({fixture!r}, 'NDJSON', '/tmp/bigsheet_test.ndjson',"
             " overwrite=True)\n"
@@ -489,6 +510,7 @@ def test_bigsheet_conversion_bounded_memory():
         )],
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
+        env=env,
     )
 
     def poll():

@@ -1,6 +1,7 @@
 """Plan-level proofs for the scale techniques in operators/scale.py."""
 
 import re
+from pathlib import Path
 
 from catme_etl_j_spark.operators import scale
 from catme_etl_j_spark.plans.explain import formatted_plan
@@ -225,7 +226,8 @@ def test_degenerate_fixture_stays_in_contract(tmp_path):
     import duckdb
 
     dst = str(tmp_path / "degen")
-    gen = ["/root/repo/tools/gen_degenerate.py", dst]
+    tools = Path(__file__).resolve().parents[1] / "tools"
+    gen = [str(tools / "gen_degenerate.py"), dst]
     subprocess.run([sys.executable, *gen], check=True, capture_output=True)
     con = duckdb.connect()
     q = lambda s: con.sql(s.replace("DIR", dst)).fetchone()  # noqa: E731
