@@ -200,6 +200,21 @@ EAGER_CONSTRUCTION = frozenset(
 )
 
 
+def _lineitem_head(sf_dir: str, n_rows: int) -> list[list]:
+    """The converter fixtures' sheet: a header row, then the first
+    ``n_rows`` lineitem rows (orderkey order) as xlsx cell values."""
+    import duckdb
+
+    rows = duckdb.sql(
+        f"SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice, "
+        f"l_returnflag, strftime(l_shipdate, '%Y-%m-%d') FROM "
+        f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
+        f"LIMIT {n_rows}"
+    ).fetchall()
+    header = ["orderkey", "partkey", "quantity", "extendedprice", "returnflag", "shipdate"]
+    return [header] + [list(r) for r in rows]
+
+
 def _bench_converter(spark, sf_dir: str, n_rows: int = 100_000) -> float:
     """Reference-workload throughput: xlsx -> NDJSON, seconds.
 
@@ -208,22 +223,13 @@ def _bench_converter(spark, sf_dir: str, n_rows: int = 100_000) -> float:
     """
     import tempfile
 
-    import duckdb
-
     from catme_etl_j_spark.converter import convert
     from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     fixture = f"/tmp/catme_bench_{tag}_{n_rows}.xlsx"
     if not os.path.exists(fixture):
-        rows = duckdb.sql(
-            f"SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice, "
-            f"l_returnflag, strftime(l_shipdate, '%Y-%m-%d') FROM "
-            f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
-            f"LIMIT {n_rows}"
-        ).fetchall()
-        header = ["orderkey", "partkey", "quantity", "extendedprice", "returnflag", "shipdate"]
-        write_xlsx(fixture + ".tmp", {"lineitem": [header] + [list(r) for r in rows]})
+        write_xlsx(fixture + ".tmp", {"lineitem": _lineitem_head(sf_dir, n_rows)})
         os.replace(fixture + ".tmp", fixture)
     # min-of-2: the first conversion pays one-time mapInArrow/binaryFile
     # codegen + Python-worker spawn; steady state is the cluster number.
@@ -246,8 +252,6 @@ def _bench_converter_parallel(
     """
     import tempfile
 
-    import duckdb
-
     from catme_etl_j_spark.converter import convert
     from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
 
@@ -255,18 +259,12 @@ def _bench_converter_parallel(
     fdir = f"/tmp/catme_bench_{tag}_{n_files}x{rows_per_file}"
     if not os.path.isdir(fdir):
         os.makedirs(fdir + ".tmp", exist_ok=True)
-        rows = duckdb.sql(
-            f"SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice, "
-            f"l_returnflag, strftime(l_shipdate, '%Y-%m-%d') FROM "
-            f"'{sf_dir}/lineitem.parquet' ORDER BY l_orderkey, l_linenumber "
-            f"LIMIT {n_files * rows_per_file}"
-        ).fetchall()
-        header = ["orderkey", "partkey", "quantity", "extendedprice", "returnflag", "shipdate"]
+        header, *rows = _lineitem_head(sf_dir, n_files * rows_per_file)
         for i in range(n_files):
             chunk = rows[i * rows_per_file : (i + 1) * rows_per_file]
             write_xlsx(
                 os.path.join(fdir + ".tmp", f"part{i}.xlsx"),
-                {"lineitem": [header] + [list(r) for r in chunk]},
+                {"lineitem": [header] + chunk},
             )
         os.replace(fdir + ".tmp", fdir)
     out = os.path.join(tempfile.mkdtemp(prefix="bench_conv_par_"), "out")
@@ -292,16 +290,17 @@ def _bench_converter_bigsheet(spark) -> float:
     use). Single run, not min-of-N — at ~85 s the steady-state number
     IS the number, and the memory pin lives in
     tests/test_converter.py::test_bigsheet_conversion_bounded_memory
-    (parse-task peak RSS < 320 MB, measured 184 MB). rows/sec =
+    (parse-task peak RSS < 320 MB, measured 182-183 MB). rows/sec =
     1_200_000 / this entry's seconds."""
     import tempfile
 
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    here = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.join(here, "tools"))
     import gen_bigxlsx
 
     from catme_etl_j_spark.converter import convert
 
-    fixture = gen_bigxlsx.generate("/root/repo/.scaledata/bigsheet.xlsx")
+    fixture = gen_bigxlsx.generate(os.path.join(here, ".scaledata", "bigsheet.xlsx"))
     out = os.path.join(tempfile.mkdtemp(prefix="bench_conv_big_"), "out.ndjson")
     t0 = time.time()
     convert(fixture, "NDJSON", out, overwrite=True, spark=spark)
@@ -401,6 +400,13 @@ SCALE_SET = [
 
 
 def _run_scale_probe() -> None:
+    """Run SCALE_SET in one fresh child session at 8 cores, then one at
+    32, and print the per-query 8->32 speedups.
+
+    Caveat: each query's speedup rests on ONE non-interleaved pair of
+    child runs (all of 8 cores, then all of 32), so drift between the
+    two sessions reads as scaling. It also needs a host with at least
+    32 cores; on a 4-core machine the receipt cannot be re-measured."""
     import math
     import subprocess
 

@@ -44,7 +44,24 @@ def spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     precedent (measured 3.0 → 0.77 s). A payload-heavy frame whose
     consumers reshuffle by key anyway gets strictly SLOWER from the
     extra exchange (the r12 _prescaled negative result: ann_nn 0.58 →
-    0.93 s — see similarity.py)."""
+    0.93 s — see similarity.py).
+
+    ``df`` must be a raw file scan: its analyzed plan only Project,
+    Filter and SubqueryAlias nodes over one file relation, else
+    ValueError. The split count is read from ``df.rdd``, and under AQE
+    that runs every pending upstream stage (a shuffle, a join) as a
+    Spark job while the query is being built."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.getClass().getSimpleName() in ("Project", "Filter", "SubqueryAlias"):
+        node = node.child()
+    if not (
+        node.getClass().getSimpleName() == "LogicalRelation"
+        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    ):
+        raise ValueError(
+            "spread_small_scan needs a raw file scan (Project/Filter/"
+            f"SubqueryAlias over one file relation), got a {node.nodeName()} node"
+        )
     n_par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n_par:
         return df.repartition(n_par)

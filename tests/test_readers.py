@@ -1,5 +1,8 @@
 """Round-trip: converter outputs -> Spark's own readers -> same data."""
 
+import pytest
+from pyspark.sql import functions as F
+
 from catme_etl_j_spark.converter import convert
 from catme_etl_j_spark.converter.xlsx_writer import write_xlsx
 
@@ -87,3 +90,43 @@ def test_parquet_schema_evolution_mergeschema(spark, sf_dir, tmp_path):
     rows = merged.count()
     nulls = merged.filter("score IS NULL").count()
     assert rows == 200 and nulls == 100
+
+
+def _documents(spark, sf_dir):
+    from catme_etl_j_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "documents")
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        # the callers: dedup._shingled, dedup_substring_mass and
+        # sketch_kmv_jaccard pass the scan, dedup._minhash_df a select
+        lambda df: df,
+        lambda df: df.select("doc_id", "text"),
+        # the other nodes the precondition allows
+        lambda df: df.filter(F.col("doc_id") > 0).alias("d").select("d.doc_id"),
+        lambda df: df.withColumn("n", F.length("text")),
+    ],
+    ids=["scan", "select", "filter-alias", "with-column"],
+)
+def test_spread_small_scan_accepts_raw_scans(spark, sf_dir, shape):
+    from catme_etl_j_spark.sources.tables import spread_small_scan
+
+    df = shape(_documents(spark, sf_dir))
+    spread = spread_small_scan(spark, df)
+    assert spread.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert spread.count() == df.count()
+
+
+def test_spread_small_scan_refuses_computed_frames(spark, sf_dir):
+    """An aggregate or a join above the scan would make ``.rdd`` run its
+    upstream stages at construction time."""
+    from catme_etl_j_spark.sources.tables import spread_small_scan
+
+    docs = _documents(spark, sf_dir)
+    with pytest.raises(ValueError, match="raw file scan"):
+        spread_small_scan(spark, docs.groupBy("source").count())
+    with pytest.raises(ValueError, match="raw file scan"):
+        spread_small_scan(spark, docs.join(docs.select("doc_id"), "doc_id"))
